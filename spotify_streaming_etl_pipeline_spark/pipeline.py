@@ -105,6 +105,15 @@ def run(
     """Execute one incremental load. Returns the resulting dim/fact
     frames (also written under ``warehouse_dir`` when ``write``).
 
+    The export is parsed once per run: the delta-filtered history is
+    cached, materialized by the ``n_history_rows`` count, and every
+    later stage (discovery, ``dim_reason``, both star joins) reads the
+    cache. ``write=True`` releases it once the written tables are
+    re-read; ``write=False`` keeps it alive, as it keeps the enrichment
+    envelopes, because the returned frames are still lazy plans over
+    it. ``n_fact_rows`` comes from the write pass's own observation
+    (``write_fact``), not from a second run of each star join.
+
     ``compact_facts`` folds small-file maintenance into the load: after
     this run's appends land, each fact table's year partitions are
     compacted to ~target-size files (operators/maintenance.py). Safe
@@ -119,8 +128,8 @@ def run(
     fact_tracks_existing = _read_if_exists(spark, f"{warehouse_dir}/fact_tracks")
     fact_podcasts_existing = _read_if_exists(spark, f"{warehouse_dir}/fact_podcasts")
     cutoff = max_loaded_ts(fact_tracks_existing, fact_podcasts_existing, None)
-    history = delta_filter(read_history(spark, raw_dir), cutoff)
-    out.n_history_rows = history.count()
+    history = delta_filter(read_history(spark, raw_dir), cutoff).persist()
+    out.n_history_rows = history.count()  # materializes the cache
 
     # -- 2. entity discovery + enrichment (A4/A5/J7, S3/S4/S7) --------------
     # ORDER MATTERS: artist URIs come from track envelopes, podcast URIs
@@ -171,29 +180,27 @@ def run(
         # the planned DataSource scan when the fetcher is importable
         # ("module:attr"), else the mapInPandas wrapper — either way
         # only the (rare) dead letters ever reach the driver.
-        # uris is persisted so the anti-join plan behind it evaluates
-        # once, not once for count() and again for the consumer below.
-        uris = uris.persist()
-        try:
-            if uris.count() > enrich_collect_max:
-                if isinstance(fetch, str):
-                    enriched = enrich_datasource(entity, uris, fetch).persist()
-                else:
-                    enriched = enrich_partitions(uris, fetch, entity).persist()
-                persisted_envelopes.append(enriched)
-                # The dead-letter collect materializes (and caches)
-                # every partition of enriched — after it, the ok-split
-                # below reads the cache, never re-fetching.
-                out.dead_letters.extend(
-                    (r["uri"], entity, r["status"])
-                    for r in enriched.filter(F.col("status") != "ok").collect()
-                )
-                return enriched.filter(F.col("status") == "ok").select(
-                    "uri", "raw_data"
-                )
-            uri_list = sorted(r["uri"] for r in uris.collect())
-        finally:
-            uris.unpersist()
+        # One bounded collect both sizes the set and, below the
+        # threshold, is the set; the distributed path re-plans uris,
+        # which is cheap over the cached history.
+        head = uris.limit(enrich_collect_max + 1).collect()
+        if len(head) > enrich_collect_max:
+            if isinstance(fetch, str):
+                enriched = enrich_datasource(entity, uris, fetch).persist()
+            else:
+                enriched = enrich_partitions(uris, fetch, entity).persist()
+            persisted_envelopes.append(enriched)
+            # The dead-letter collect materializes (and caches)
+            # every partition of enriched — after it, the ok-split
+            # below reads the cache, never re-fetching.
+            out.dead_letters.extend(
+                (r["uri"], entity, r["status"])
+                for r in enriched.filter(F.col("status") != "ok").collect()
+            )
+            return enriched.filter(F.col("status") == "ok").select(
+                "uri", "raw_data"
+            )
+        uri_list = sorted(r["uri"] for r in head)
         if isinstance(fetch, str):
             from .sources.restsource import _resolve_fetch
 
@@ -268,9 +275,10 @@ def run(
         # Facts first: their plans broadcast-read the CURRENT dim
         # parquet, which the dim swap below deletes. Fact writes are
         # appends, so ordering them first is both safe and required.
+        # The append's own observation counts its rows: no extra pass.
         for name, df in out.facts.items():
-            out.n_fact_rows[name] = df.count()
-            write_fact(df, f"{warehouse_dir}/fact_{name}")
+            path = f"{warehouse_dir}/fact_{name}"
+            out.n_fact_rows[name] = write_fact(df, path)["n_rows"]
         if compact_facts:
             from .operators.maintenance import compact_partitioned
 
@@ -287,11 +295,13 @@ def run(
         for name in out.facts:
             out.facts[name] = spark.read.parquet(f"{warehouse_dir}/fact_{name}")
         # The re-read repointed every returned frame at parquet, so the
-        # cached enrichment envelopes are no longer reachable — release
-        # their executor storage instead of leaking it across entities.
-        # (write=False intentionally keeps them cached: the returned
-        # dims/facts are still lazy plans over the envelopes, and a
-        # recompute would re-hit the REST source.)
+        # cached history and enrichment envelopes are no longer
+        # reachable — release their executor storage instead of
+        # leaking it across runs. (write=False intentionally keeps them
+        # cached: the returned dims/facts are still lazy plans over
+        # them, and a recompute would re-parse the export and re-hit
+        # the REST source.)
+        history.unpersist()
         for df in persisted_envelopes:
             df.unpersist()
         # The URI staging parquet is likewise unreachable now — drop it

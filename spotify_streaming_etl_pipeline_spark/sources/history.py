@@ -9,11 +9,20 @@ scripts/connectors/db_manager.py:139-153), strict ``>`` comparison.
 The filter is a plain Catalyst predicate, so on a date-partitioned
 lake it prunes partitions; under Structured Streaming the file source
 + checkpoint replaces it entirely (streaming/ingest.py).
+
+``read_history`` is lazy: every action on it re-parses the export.
+The batch runner (pipeline.py:run) therefore parses the export once
+per run: it caches the delta-filtered history for the run, and every
+later stage reads the cache. ``write=True`` releases the cache after
+the written tables are re-read; ``write=False`` keeps it alive, as it
+keeps the enrichment envelopes, because the returned frames still
+read it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,9 +64,10 @@ def max_loaded_ts(
 
     Fact tables store naive MSK wall-clock (``ts_msk``) — convert back
     to UTC before comparing, like the reference
-    (db_manager.py:144-146)."""
+    (db_manager.py:144-146). The present tables' timestamp columns are
+    unioned under one aggregate, so all maxes come back in one action."""
     floor = dt.datetime(1900, 1, 1)
-    candidates = [floor]
+    columns = []
     for df, col, is_msk in (
         (fact_tracks, "ts_msk", True),
         (fact_podcasts, "ts_msk", True),
@@ -66,10 +76,12 @@ def max_loaded_ts(
         if df is None:
             continue
         expr = to_utc(F.col(col)) if (is_msk and msk_cols) else F.col(col)
-        row = df.agg(F.max(expr).alias("m")).collect()[0]
-        if row["m"] is not None:
-            candidates.append(row["m"])
-    return max(candidates)
+        columns.append(df.select(expr.alias("m")))
+    if not columns:
+        return floor
+    union = functools.reduce(DataFrame.unionByName, columns)
+    m = union.agg(F.max("m").alias("m")).collect()[0]["m"]
+    return floor if m is None else max(floor, m)
 
 
 def delta_filter(history: DataFrame, cutoff: dt.datetime) -> DataFrame:

@@ -271,6 +271,30 @@ def test_fact_delta_cutoff_roundtrip(spark):
     assert fact_again.count() == 0
 
 
+def test_max_loaded_ts_greatest_of_three_with_floor(spark):
+    """A6: GREATEST over both facts (MSK wall-clock back to UTC) and the
+    staging table (already UTC); absent or empty tables fall to the
+    1900-01-01 floor."""
+    h, dtr, da, de, dp, dr = _mini_warehouse(spark)
+    ft = facts.build_fact_tracks(h, dtr, da, dr)  # play at 2021-06-01 21:30 UTC
+    fp = facts.build_fact_podcasts(h, de, dp, dr)  # play at 2021-06-02 05:00 UTC
+    floor = dt.datetime(1900, 1, 1)
+    assert max_loaded_ts(None, None, None) == floor
+    assert max_loaded_ts(ft.filter(F.lit(False)), None, None) == floor
+    assert max_loaded_ts(ft, None, None) == dt.datetime(2021, 6, 1, 21, 30)
+    assert max_loaded_ts(ft, fp, None) == dt.datetime(2021, 6, 2, 5, 0)
+
+    def staging(ts):
+        return spark.createDataFrame([(ts,)], "ts timestamp")
+
+    assert max_loaded_ts(ft, fp, staging(dt.datetime(2021, 1, 1))) == dt.datetime(
+        2021, 6, 2, 5, 0
+    )
+    assert max_loaded_ts(ft, fp, staging(dt.datetime(2022, 1, 1))) == dt.datetime(
+        2022, 1, 1
+    )
+
+
 # --- marts over a fact built end-to-end -------------------------------------
 
 

@@ -111,9 +111,77 @@ def test_pipeline_end_to_end_then_incremental_noop(spark, raw_dir, tmp_path):
     # second run: delta cutoff excludes everything already loaded
     res2 = pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
     assert res2.n_history_rows == 0
-    assert res2.n_fact_rows["tracks"] == 0  # nothing re-appended
+    assert res2.n_fact_rows == {"tracks": 0, "podcasts": 0}  # nothing re-appended
     assert res2.facts["tracks"].count() == 3  # table unchanged
     assert res2.dims["track"].count() == 2  # dims stable across reruns
+
+
+def _warehouse_rows(spark, wh):
+    """Every table of a warehouse as sorted row tuples, by table name."""
+    import os
+
+    return {
+        name: sorted(map(tuple, spark.read.parquet(f"{wh}/{name}").collect()))
+        for name in sorted(os.listdir(wh))
+        if name.startswith(("dim_", "fact_"))
+    }
+
+
+def test_pipeline_parses_export_once(spark, raw_dir, tmp_path):
+    """The run reads the export once: a track fetcher that deletes the
+    raw directory on its first call must not break any later stage
+    (discovery, dim_reason, both star joins), and the warehouse must
+    equal that of a normal run over the same files."""
+    import shutil
+
+    once = tmp_path / "raw_once"
+    shutil.copytree(raw_dir, once)
+    fetchers = _fake_fetchers()
+    fetch_tracks = fetchers["track"]
+    deleted = []
+
+    def fetch_tracks_then_delete_export(batch):
+        if not deleted:
+            shutil.rmtree(once)
+            deleted.append(True)
+        return fetch_tracks(batch)
+
+    fetchers["track"] = fetch_tracks_then_delete_export
+    wh_once, wh_normal = str(tmp_path / "wh_once"), str(tmp_path / "wh_normal")
+    res_once = pipeline.run(spark, str(once), wh_once, fetchers=fetchers)
+    res_normal = pipeline.run(spark, str(raw_dir), wh_normal, fetchers=_fake_fetchers())
+
+    assert deleted and not once.exists()
+    assert res_once.n_fact_rows == res_normal.n_fact_rows == {"tracks": 3, "podcasts": 1}
+    rows_once = _warehouse_rows(spark, wh_once)
+    assert set(rows_once) == {
+        "dim_track", "dim_artist", "dim_episode", "dim_podcast", "dim_reason",
+        "fact_tracks", "fact_podcasts",
+    }  # fmt: skip
+    assert rows_once == _warehouse_rows(spark, wh_normal)
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_pipeline_releases_its_caches(spark, raw_dir, tmp_path):
+    """A write=True run leaves no RDD persisted (the cached history and
+    envelopes are released once the written tables are re-read), and an
+    empty-delta rerun reports zero appended rows from its write pass."""
+    wh = str(tmp_path / "warehouse")
+    # The session is shared: other tests' caches may be present, or be
+    # released meanwhile, so check that the runs add none.
+    before = _persistent_rdd_ids(spark)
+    res = pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
+    assert res.n_fact_rows == {"tracks": 3, "podcasts": 1}
+    assert _persistent_rdd_ids(spark) <= before
+
+    res2 = pipeline.run(spark, str(raw_dir), wh, fetchers=_fake_fetchers())
+    assert res2.n_history_rows == 0
+    assert res2.n_fact_rows == {"tracks": 0, "podcasts": 0}
+    assert res2.facts["tracks"].count() == 3
+    assert _persistent_rdd_ids(spark) <= before
 
 
 def test_pipeline_size_switch_distributed_enrichment(spark, raw_dir, tmp_path):
