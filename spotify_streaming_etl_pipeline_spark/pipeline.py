@@ -2,16 +2,33 @@
 and scripts/main.py:5-10): raw export JSON -> enrichment -> dims ->
 facts, in one call.
 
-Stage ordering preserves the reference's data dependency (reference
-scripts/etl/extractor.py:317): **tracks before artists, episodes
-before podcasts**, because artist/podcast URIs are mined FROM the
-track/episode envelopes (plans/dims.py A5), not from history.
+One run is one incremental load that does the least work the delta
+needs, and that a crash at any point cannot corrupt:
+
+- **Discovery** is the reference's set difference ``new = history −
+  core − staged`` (J7, extractor.py:227-252; ``dims.new_entities``)
+  against the stored dims, so the fetchers only see URIs the warehouse
+  has never stored. Stage order preserves the reference's data
+  dependency (extractor.py:317): **tracks before artists, episodes
+  before podcasts**, because artist/podcast URIs are mined FROM the
+  track/episode envelopes (plans/dims.py A5). The lead artists of the
+  stored tracks and the shows of the stored episodes are candidates
+  too, so an artist or podcast whose fetch dead-lettered is retried.
+- **Dims** are rebuilt and rewritten only when they changed; an
+  unchanged dim is the stored table as is.
+- **Write order:** changed dims first, each after the dims its
+  envelopes name (artist, track, podcast, episode, reason), then the
+  star joins over the stored dims, and the fact appends last. Each
+  fact table's high-water mark only moves with its own append, so a
+  crash before an append leaves that table's plays in the next run's
+  delta, and the dims already written keep the keys the rerun's facts
+  resolve to.
 
 Every stage is the same builder the query layer uses — the runner only
-sequences them and handles warehouse I/O (idempotent appends, delta
-cutoff). ``fetchers`` injects the API clients per entity type, so runs
-are fully testable offline; None skips enrichment (dims load only from
-already-staged envelopes, if any).
+sequences them and handles warehouse I/O (crash-safe dim swaps,
+appends, delta cutoff). ``fetchers`` injects the API clients per
+entity type, so runs are fully testable offline; None skips enrichment
+(the stored dims stand as they are).
 
 A fetcher may be a plain callable or a ``"module:attr"`` string.  The
 string form unlocks the planned-source scale path: above
@@ -27,6 +44,7 @@ below the threshold both forms use the reference-shaped driver loop.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -55,8 +73,12 @@ class RunResult:
 
 
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    if os.path.isdir(path):
-        return spark.read.parquet(path)
+    """The parquet table at ``path``, or None when it holds no parquet
+    file: a partitioned append of zero rows leaves only ``_SUCCESS``,
+    from which Spark cannot infer a schema."""
+    for _, _, files in os.walk(path):
+        if any(f.endswith(".parquet") for f in files):
+            return spark.read.parquet(path)
     return None
 
 
@@ -108,11 +130,45 @@ def run(
     The export is parsed once per run: the delta-filtered history is
     cached, materialized by the ``n_history_rows`` count, and every
     later stage (discovery, ``dim_reason``, both star joins) reads the
-    cache. ``write=True`` releases it once the written tables are
-    re-read; ``write=False`` keeps it alive, as it keeps the enrichment
-    envelopes, because the returned frames are still lazy plans over
-    it. ``n_fact_rows`` comes from the write pass's own observation
-    (``write_fact``), not from a second run of each star join.
+    cache. Each fact table has its own high-water mark: track plays are
+    kept when newer than the latest stored ``fact_tracks`` row, episode
+    plays when newer than the latest ``fact_podcasts`` row.
+
+    Discovery is the reference's J7 rule, ``dims.new_entities``: only
+    URIs the stored dims lack reach the fetchers. Artist candidates are
+    the artists of this run's track envelopes plus the lead artists of
+    the stored ``dim_track``; podcast candidates likewise come from the
+    episode envelopes plus the stored ``dim_episode``. So an artist or
+    podcast whose fetch dead-lettered is requested again by the next
+    run. A dead-lettered track or episode is never stored, so it is
+    requested again whenever a later delta plays it.
+
+    Only a dim that changed is rebuilt and rewritten: one that got an
+    envelope in this run (on the distributed fetch path, any dim that
+    was fetched at all), and ``dim_reason`` when the delta holds a
+    reason it lacks. Any other dim is the stored table, neither
+    re-keyed nor rewritten. On the first run every dim is built.
+
+    ``write=True`` writes the changed dims first, each after the dims
+    its envelopes name (artist, track, podcast, episode, reason), each
+    by a crash-safe swap; it then builds both star joins over the stored
+    dim parquet and appends the facts last. A crash at any point leaves
+    the high-water mark of every fact table not yet appended where it
+    was, so the rerun reloads those plays; the dims the crashed run
+    wrote already hold its new entities, which the rerun neither
+    re-fetches nor re-keys, so the rerun's warehouse equals that of one
+    clean run. Because an artist is written before its track and a
+    show before its episode, a crash never leaves a stored track whose
+    artists are not stored yet, nor a stored episode whose show is not.
+    The cached history and envelopes are released once the written
+    tables are re-read. ``write=False`` builds the facts over the lazy
+    dims and keeps the caches alive, because the returned frames are
+    still plans over them.
+
+    ``n_fact_rows`` comes from the write pass's own observation
+    (``write_fact``), not from a second run of each star join. A fact
+    table that holds no rows yet (say, no podcast play was ever
+    loaded) is absent from ``facts``.
 
     ``compact_facts`` folds small-file maintenance into the load: after
     this run's appends land, each fact table's year partitions are
@@ -123,19 +179,62 @@ def run(
 
     out = RunResult()
     fetchers = fetchers or {}
+    # entity -> (cleaner, natural key, surrogate key, sentinel row or None)
+    cleaners = {
+        "track": (dims_mod.clean_tracks, "spotify_track_uri", "track_id", None),
+        "artist": (dims_mod.clean_artists, "spotify_artist_uri", "artist_id", None),
+        "episode": (
+            dims_mod.clean_episodes, "spotify_episode_uri", "episode_id",
+            dims_mod.sentinel_episode,
+        ),
+        "podcast": (
+            dims_mod.clean_podcasts, "spotify_podcast_uri", "podcast_id",
+            dims_mod.sentinel_podcast,
+        ),
+    }  # fmt: skip
+    stored = {
+        entity: _read_if_exists(spark, f"{warehouse_dir}/dim_{entity}")
+        for entity in (*cleaners, "reason")
+    }
 
     # -- 1. ingest history with the delta cutoff (S1/S2/A6) ----------------
-    fact_tracks_existing = _read_if_exists(spark, f"{warehouse_dir}/fact_tracks")
-    fact_podcasts_existing = _read_if_exists(spark, f"{warehouse_dir}/fact_podcasts")
-    cutoff = max_loaded_ts(fact_tracks_existing, fact_podcasts_existing, None)
+    # Each fact table is its own sink with its own high-water mark, so a
+    # crash between the two appends cannot let one table's newer plays
+    # hide the other's unloaded ones.
+    cutoff_tracks = max_loaded_ts(
+        _read_if_exists(spark, f"{warehouse_dir}/fact_tracks"), None, None
+    )
+    cutoff_podcasts = max_loaded_ts(
+        None, _read_if_exists(spark, f"{warehouse_dir}/fact_podcasts"), None
+    )
+    episode_play = F.col("spotify_episode_uri").isNotNull() & (
+        F.col("spotify_episode_uri") != ""
+    )
+    cutoff = F.when(episode_play, F.lit(cutoff_podcasts)).otherwise(
+        F.lit(cutoff_tracks)
+    )
     history = delta_filter(read_history(spark, raw_dir), cutoff).persist()
     out.n_history_rows = history.count()  # materializes the cache
 
     # -- 2. entity discovery + enrichment (A4/A5/J7, S3/S4/S7) --------------
     # ORDER MATTERS: artist URIs come from track envelopes, podcast URIs
     # from episode envelopes (reference extractor.py:317).
-    envelopes: dict[str, DataFrame] = {}
+    envelopes: dict[str, DataFrame | None] = {}
     persisted_envelopes: list[DataFrame] = []
+
+    def new_uris(entity: str, *sources: tuple[DataFrame | None, str]) -> DataFrame:
+        """J7: the distinct URIs of ``sources`` that the stored dim lacks."""
+        found = [df.select(F.col(c).alias("uri")) for df, c in sources if df is not None]
+        if not found:
+            return spark.createDataFrame([], "uri string")
+        candidates = dims_mod.distinct_uris(
+            functools.reduce(DataFrame.unionByName, found), "uri"
+        )
+        existing = stored[entity]
+        core = None if existing is None else existing.select(
+            F.col(cleaners[entity][1]).alias("uri")
+        )
+        return dims_mod.new_entities(candidates, core, None)
 
     def enrich_datasource(entity: str, uris: DataFrame, fetch_path: str) -> DataFrame:
         """The planned-source scale path: stage the URI set as parquet
@@ -170,6 +269,9 @@ def run(
         )
 
     def enrich(entity: str, uris: DataFrame) -> DataFrame | None:
+        """Envelopes of the new ``uris``, or None when the dim gets
+        nothing from this run: no fetcher, or (on the driver path) no
+        envelope came back for a dim that is already stored."""
         fetch = fetchers.get(entity)
         if fetch is None:
             return None
@@ -207,110 +309,131 @@ def run(
             fetch = _resolve_fetch(fetch)
         result = fetch_in_batches(uri_list, fetch, entity)
         out.dead_letters.extend(result.failures)
+        if not result.records and stored[entity] is not None:
+            return None
         return spark.createDataFrame(
             [(u, json.dumps(p, sort_keys=True)) for u, p in result.records],
             "uri string, raw_data string",
         )
 
     envelopes["track"] = enrich(
-        "track", dims_mod.distinct_uris(history, "spotify_track_uri")
+        "track", new_uris("track", (history, "spotify_track_uri"))
     )
     envelopes["artist"] = enrich(
         "artist",
-        dims_mod.artist_uris_from_track_envelopes(envelopes["track"])
-        if envelopes["track"] is not None
-        else spark.createDataFrame([], "uri string"),
+        new_uris(
+            "artist",
+            (
+                dims_mod.artist_uris_from_track_envelopes(envelopes["track"])
+                if envelopes["track"] is not None
+                else None,
+                "uri",
+            ),
+            (stored["track"], "spotify_artist_uri"),
+        ),
     )
     envelopes["episode"] = enrich(
-        "episode", dims_mod.distinct_uris(history, "spotify_episode_uri")
+        "episode", new_uris("episode", (history, "spotify_episode_uri"))
     )
     envelopes["podcast"] = enrich(
         "podcast",
-        dims_mod.podcast_uris_from_episode_envelopes(envelopes["episode"])
-        if envelopes["episode"] is not None
-        else spark.createDataFrame([], "uri string"),
+        new_uris(
+            "podcast",
+            (
+                dims_mod.podcast_uris_from_episode_envelopes(envelopes["episode"])
+                if envelopes["episode"] is not None
+                else None,
+                "uri",
+            ),
+            (stored["episode"], "spotify_podcast_uri"),
+        ),
     )
 
-    # -- 3. clean envelopes -> idempotent dim loads (§2.10, J10, F23) -------
-    cleaners = {
-        "track": (dims_mod.clean_tracks, "spotify_track_uri", "track_id"),
-        "artist": (dims_mod.clean_artists, "spotify_artist_uri", "artist_id"),
-        "episode": (dims_mod.clean_episodes, "spotify_episode_uri", "episode_id"),
-        "podcast": (dims_mod.clean_podcasts, "spotify_podcast_uri", "podcast_id"),
-    }
-    for entity, (clean, natural_key, key_name) in cleaners.items():
-        existing = _read_if_exists(spark, f"{warehouse_dir}/dim_{entity}")
+    # -- 3. clean envelopes -> idempotent loads of the changed dims ---------
+    # (§2.10, J10, F23). An unchanged dim is the stored table as is: no
+    # current_max_key action, no rewrite, no re-read.
+    changed: set[str] = set()
+    for entity, (clean, natural_key, key_name, sentinel) in cleaners.items():
         if envelopes[entity] is None:
-            if existing is not None:
-                out.dims[entity] = existing
+            if stored[entity] is not None:
+                out.dims[entity] = stored[entity]
             continue
-        cleaned = clean(envelopes[entity])
-        out.dims[entity] = dims_mod.load_dim(cleaned, natural_key, key_name, existing)
-
-    # Sentinel rows for fact lookups that miss (dummy_values.sql).
-    if "episode" in out.dims:
-        out.dims["episode"] = dims_mod.sentinel_episode(spark).unionByName(
-            out.dims["episode"].filter(F.col("episode_id") != 0)
+        dim = dims_mod.load_dim(
+            clean(envelopes[entity]), natural_key, key_name, stored[entity]
         )
-    if "podcast" in out.dims:
-        out.dims["podcast"] = dims_mod.sentinel_podcast(spark).unionByName(
-            out.dims["podcast"].filter(F.col("podcast_id") != 0)
-        )
+        if sentinel is not None:
+            # Sentinel row for fact lookups that miss (dummy_values.sql).
+            dim = sentinel(spark).unionByName(dim.filter(F.col(key_name) != 0))
+        out.dims[entity] = dim
+        changed.add(entity)
 
-    existing_reason = _read_if_exists(spark, f"{warehouse_dir}/dim_reason")
-    out.dims["reason"] = dims_mod.build_dim_reason(history, existing_reason)
+    if stored["reason"] is None or (
+        dims_mod.build_dim_reason(history)
+        .join(stored["reason"], ["reason_type", "reason_group"], "left_anti")
+        .limit(1)
+        .collect()
+    ):
+        out.dims["reason"] = dims_mod.build_dim_reason(history, stored["reason"])
+        changed.add("reason")
+    else:
+        out.dims["reason"] = stored["reason"]
 
     # -- 4. facts: the two star joins (J1/J2) -------------------------------
-    if {"track", "artist"} <= out.dims.keys():
-        out.facts["tracks"] = build_fact_tracks(
-            history, out.dims["track"], out.dims["artist"], out.dims["reason"]
-        )
-    if {"episode", "podcast"} <= out.dims.keys():
-        out.facts["podcasts"] = build_fact_podcasts(
-            history, out.dims["episode"], out.dims["podcast"], out.dims["reason"]
-        )
+    def star_joins(dims: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        facts = {}
+        if {"track", "artist"} <= dims.keys():
+            facts["tracks"] = build_fact_tracks(
+                history, dims["track"], dims["artist"], dims["reason"]
+            )
+        if {"episode", "podcast"} <= dims.keys():
+            facts["podcasts"] = build_fact_podcasts(
+                history, dims["episode"], dims["podcast"], dims["reason"]
+            )
+        return facts
 
-    # -- 5. persist ---------------------------------------------------------
-    if write:
-        # Facts first: their plans broadcast-read the CURRENT dim
-        # parquet, which the dim swap below deletes. Fact writes are
-        # appends, so ordering them first is both safe and required.
-        # The append's own observation counts its rows: no extra pass.
-        for name, df in out.facts.items():
-            path = f"{warehouse_dir}/fact_{name}"
-            out.n_fact_rows[name] = write_fact(df, path)["n_rows"]
-        if compact_facts:
-            from .operators.maintenance import compact_partitioned
+    if not write:
+        out.facts = star_joins(out.dims)
+        return out
 
-            for name in out.facts:
-                out.compacted[name] = compact_partitioned(
-                    spark, f"{warehouse_dir}/fact_{name}"
-                )
-        for entity, df in out.dims.items():
-            _overwrite_parquet_safe(df, f"{warehouse_dir}/dim_{entity}")
-        # Re-read everything written: the pre-swap lazy plans pin file
-        # listings that no longer exist; callers get fresh frames.
-        for entity in out.dims:
-            out.dims[entity] = spark.read.parquet(f"{warehouse_dir}/dim_{entity}")
-        for name in out.facts:
-            out.facts[name] = spark.read.parquet(f"{warehouse_dir}/fact_{name}")
-        # The re-read repointed every returned frame at parquet, so the
-        # cached history and enrichment envelopes are no longer
-        # reachable — release their executor storage instead of
-        # leaking it across runs. (write=False intentionally keeps them
-        # cached: the returned dims/facts are still lazy plans over
-        # them, and a recompute would re-parse the export and re-hit
-        # the REST source.)
-        history.unpersist()
-        for df in persisted_envelopes:
-            df.unpersist()
-        # The URI staging parquet is likewise unreachable now — drop it
-        # so repeated runs don't accumulate stale snapshots beside the
-        # real tables. (write=False keeps it: returned frames' lineage
-        # may still read it on cache eviction.)
-        import shutil
+    # -- 5. persist: changed dims (named entities first), then facts ------
+    # The appends move the high-water marks, so they come last: a crash
+    # before them leaves the delta for the rerun.
+    for entity in ("artist", "track", "podcast", "episode", "reason"):
+        if entity in changed:
+            path = f"{warehouse_dir}/dim_{entity}"
+            _overwrite_parquet_safe(out.dims[entity], path)
+            out.dims[entity] = spark.read.parquet(path)
+    # The star joins broadcast the stored dim parquet; the append's own
+    # observation counts its rows: no extra pass.
+    facts = star_joins(out.dims)
+    for name, df in facts.items():
+        out.n_fact_rows[name] = write_fact(df, f"{warehouse_dir}/fact_{name}")["n_rows"]
+    if compact_facts:
+        from .operators.maintenance import compact_partitioned
 
-        shutil.rmtree(
-            f"{warehouse_dir}/_staging/enrich_uris", ignore_errors=True
-        )
+        for name in facts:
+            out.compacted[name] = compact_partitioned(
+                spark, f"{warehouse_dir}/fact_{name}"
+            )
+    # Callers get the full stored fact tables, freshly listed.
+    for name in facts:
+        table = _read_if_exists(spark, f"{warehouse_dir}/fact_{name}")
+        if table is not None:
+            out.facts[name] = table
+    # Every returned frame now reads parquet, so the cached history and
+    # enrichment envelopes are no longer reachable — release their
+    # executor storage instead of leaking it across runs. (write=False
+    # keeps them cached: the returned dims/facts are still lazy plans
+    # over them, and a recompute would re-parse the export and re-hit
+    # the REST source.)
+    history.unpersist()
+    for df in persisted_envelopes:
+        df.unpersist()
+    # The URI staging parquet is likewise unreachable now — drop it
+    # so repeated runs don't accumulate stale snapshots beside the
+    # real tables. (write=False keeps it: returned frames' lineage
+    # may still read it on cache eviction.)
+    import shutil
+
+    shutil.rmtree(f"{warehouse_dir}/_staging/enrich_uris", ignore_errors=True)
     return out

@@ -24,7 +24,7 @@ from __future__ import annotations
 import datetime as dt
 import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import to_utc
@@ -84,8 +84,8 @@ def max_loaded_ts(
     return floor if m is None else max(floor, m)
 
 
-def delta_filter(history: DataFrame, cutoff: dt.datetime) -> DataFrame:
+def delta_filter(history: DataFrame, cutoff: dt.datetime | Column) -> DataFrame:
     """S2: strict ``ts > cutoff`` (reference extractor.py:65 — tested
     truth table: cutoffs {2020,2022,2023}-01-01 over rows at 2021/2023
-    pass {2, 1, 0} rows)."""
+    pass {2, 1, 0} rows). ``cutoff`` may be a column, a per-row cutoff."""
     return history.filter(F.col("ts") > F.lit(cutoff))

@@ -3,6 +3,7 @@ and the end-to-end pipeline runner (fixture JSON -> queryable marts)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pytest
@@ -182,6 +183,249 @@ def test_pipeline_releases_its_caches(spark, raw_dir, tmp_path):
     assert res2.n_fact_rows == {"tracks": 0, "podcasts": 0}
     assert res2.facts["tracks"].count() == 3
     assert _persistent_rdd_ids(spark) <= before
+
+
+def _grown_fetchers():
+    """``_fake_fetchers`` in which the entities a later export adds bring
+    parents of their own: ``track:789`` a second, new artist
+    (``artist:11``) and ``episode:8`` a new show (``show:43``)."""
+    fetchers = _fake_fetchers()
+    fetch_tracks, fetch_episodes = fetchers["track"], fetchers["episode"]
+
+    def tracks(batch):
+        env = fetch_tracks(batch)
+        for t in env["tracks"]:
+            if t["uri"] == "spotify:track:789":
+                t["artists"] = [
+                    {"name": "Test Artist", "uri": "spotify:artist:9"},
+                    {"name": "New Artist", "uri": "spotify:artist:11"},
+                ]
+        return env
+
+    def episodes(batch):
+        env = fetch_episodes(batch)
+        for e in env["episodes"]:
+            if e["uri"] == "spotify:episode:8":
+                e["show"] = {"name": "New Show", "uri": "spotify:show:43"}
+        return env
+
+    return fetchers | {"track": tracks, "episode": episodes}
+
+
+def _logged(fetchers, log_dir, dead=()):
+    """Wrap each fetcher so that it appends every batch it is asked for
+    to ``log_dir/<entity>.jsonl`` — a file, so calls made on executors
+    are seen too — and returns null for the URIs in ``dead``."""
+    import os
+
+    def wrap(entity, fetch):
+        def logged(batch):
+            with open(os.path.join(log_dir, f"{entity}.jsonl"), "a") as f:
+                f.write(json.dumps(batch) + "\n")
+            env = fetch(batch)
+            key = next(iter(env))
+            return {key: [None if i["uri"] in dead else i for i in env[key]]}
+
+        return logged
+
+    return {entity: wrap(entity, fetch) for entity, fetch in fetchers.items()}
+
+
+def _requested(log_dir):
+    """Entity -> sorted URIs requested since the last call (clears the log)."""
+    got = {}
+    for entity in ("track", "artist", "episode", "podcast"):
+        log = log_dir / f"{entity}.jsonl"
+        lines = log.read_text().splitlines() if log.exists() else []
+        got[entity] = sorted(u for line in lines for u in json.loads(line))
+        log.unlink(missing_ok=True)
+    return got
+
+
+def _track_plays(spark, wh):
+    """(track URI, fact ts_msk) of every stored track play."""
+    fact = spark.read.parquet(f"{wh}/fact_tracks")
+    dim = spark.read.parquet(f"{wh}/dim_track")
+    joined = fact.join(dim, fact.track_fk == dim.track_id, "left")
+    return sorted(
+        (r["spotify_track_uri"], r["ts_msk"])
+        for r in joined.select("spotify_track_uri", "ts_msk").collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "play",
+    [
+        {},
+        {
+            "spotify_track_uri": None,
+            "master_metadata_track_name": None,
+            "episode_name": "Ep 1",
+            "episode_show_name": "Test Show",
+            "spotify_episode_uri": "spotify:episode:7",
+        },
+    ],
+    ids=["tracks_only", "podcasts_only"],
+)
+def test_pipeline_one_sided_exports(spark, tmp_path, play):
+    """An export with plays of one kind only loads, and so does the next
+    run: the other fact table has no rows, and its directory holds only
+    ``_SUCCESS``, which must count as no table rather than fail the
+    schema inference."""
+    raw, wh = tmp_path / "raw", str(tmp_path / "warehouse")
+    raw.mkdir()
+    side = "podcasts" if play else "tracks"
+    other = "tracks" if play else "podcasts"
+    _write_export(raw / "export_1.json", [history_row(**play)])
+    res = pipeline.run(spark, str(raw), wh, fetchers=_fake_fetchers())
+    assert res.n_fact_rows == {side: 1, other: 0}
+    assert set(res.facts) == {side}
+
+    _write_export(raw / "export_2.json", [history_row(ts="2021-02-01T00:00:00Z", **play)])
+    res2 = pipeline.run(spark, str(raw), wh, fetchers=_fake_fetchers())
+    assert res2.n_history_rows == 1
+    assert res2.n_fact_rows == {side: 1, other: 0}
+    assert res2.facts[side].count() == 2
+
+
+@pytest.mark.parametrize("enrich_collect_max", [10_000, 0], ids=["driver", "distributed"])
+def test_pipeline_fetches_only_new_uris(spark, raw_dir, tmp_path, enrich_collect_max):
+    """J7: an incremental run asks the API only for URIs the warehouse
+    has never stored — the new track and the one artist of its envelope
+    that is new — on the driver loop and on the distributed path alike."""
+    logs, wh = tmp_path / "logs", str(tmp_path / "warehouse")
+    logs.mkdir()
+    fetchers = _logged(_grown_fetchers(), str(logs))
+    pipeline.run(spark, str(raw_dir), wh, fetchers=fetchers)
+    first = _requested(logs)
+    assert first["track"] == ["spotify:track:123", "spotify:track:456"]
+    assert first["artist"] == ["spotify:artist:10", "spotify:artist:9"]
+
+    _write_export(
+        raw_dir / "export_3.json",
+        [history_row(ts="2022-02-01T12:00:00Z", spotify_track_uri="spotify:track:789")],
+    )
+    res = pipeline.run(
+        spark, str(raw_dir), wh, fetchers=fetchers, enrich_collect_max=enrich_collect_max
+    )
+    assert _requested(logs) == {
+        "track": ["spotify:track:789"],
+        "artist": ["spotify:artist:11"],
+        "episode": [],
+        "podcast": [],
+    }
+    assert res.dead_letters == []
+    assert res.n_fact_rows == {"tracks": 1, "podcasts": 0}
+    assert ("spotify:track:789", dt.datetime(2022, 2, 1, 15, 0)) in _track_plays(spark, wh)
+
+
+def test_pipeline_crash_at_every_write_then_clean_rerun(spark, raw_dir, tmp_path, monkeypatch):
+    """A crash before any of the run's writes (five dims, then two fact
+    appends), followed by a clean rerun, leaves the warehouse one clean
+    run leaves — even a crash between the two appends, whose delta
+    holds a podcast play older than the appended track play."""
+    import shutil
+
+    base = str(tmp_path / "base")
+    pipeline.run(spark, str(raw_dir), base, fetchers=_grown_fetchers())
+    _write_export(
+        raw_dir / "export_3.json",
+        [
+            history_row(
+                ts="2022-02-01T12:00:00Z",
+                spotify_track_uri="spotify:track:789",
+                reason_start="clickrow",
+            ),
+            history_row(
+                ts="2022-01-15T00:00:00Z",
+                spotify_track_uri=None,
+                master_metadata_track_name=None,
+                episode_name="Ep 8",
+                episode_show_name="New Show",
+                spotify_episode_uri="spotify:episode:8",
+            ),
+        ],
+    )
+    real = {
+        "_overwrite_parquet_safe": pipeline._overwrite_parquet_safe,
+        "write_fact": pipeline.write_fact,
+    }
+    writes = []
+
+    def crash_at(k):
+        def patched(name):
+            def call(*args, **kwargs):
+                writes.append(name)
+                if len(writes) == k:
+                    raise RuntimeError(f"injected crash before write {k}")
+                return real[name](*args, **kwargs)
+
+            return call
+
+        writes.clear()
+        for name in real:
+            monkeypatch.setattr(pipeline, name, patched(name))
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(base, clean)
+    crash_at(None)
+    res = pipeline.run(spark, str(raw_dir), clean, fetchers=_grown_fetchers())
+    assert res.n_fact_rows == {"tracks": 1, "podcasts": 1}
+    assert writes == ["_overwrite_parquet_safe"] * 5 + ["write_fact"] * 2
+    expected = _warehouse_rows(spark, clean)
+    assert ("spotify:track:789", dt.datetime(2022, 2, 1, 15, 0)) in _track_plays(spark, clean)
+
+    for k in range(1, 8):
+        wh = str(tmp_path / f"crash_{k}")
+        shutil.copytree(base, wh)
+        crash_at(k)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            pipeline.run(spark, str(raw_dir), wh, fetchers=_grown_fetchers())
+        crash_at(None)
+        pipeline.run(spark, str(raw_dir), wh, fetchers=_grown_fetchers())
+        assert _warehouse_rows(spark, wh) == expected, f"crash before write {k}"
+
+
+def test_pipeline_rerun_writes_only_what_changed(spark, raw_dir, tmp_path):
+    """A run whose delta adds nothing writes no dim and calls no
+    fetcher — except that an artist whose fetch dead-lettered is asked
+    for again, alone, and only its dim is rewritten."""
+    import os
+
+    logs, wh = tmp_path / "logs", str(tmp_path / "warehouse")
+    logs.mkdir()
+
+    def part_files():
+        return {
+            name: sorted(os.listdir(f"{wh}/{name}"))
+            for name in os.listdir(wh)
+            if name.startswith("dim_")
+        }
+
+    res = pipeline.run(
+        spark, str(raw_dir), wh,
+        fetchers=_logged(_fake_fetchers(), str(logs), dead={"spotify:artist:9"}),
+    )  # fmt: skip
+    assert res.dead_letters == [("spotify:artist:9", "artist", "API returned null")]
+    _requested(logs)  # clears the first run's log
+    before = part_files()
+
+    fetchers = _logged(_fake_fetchers(), str(logs))
+    res2 = pipeline.run(spark, str(raw_dir), wh, fetchers=fetchers)
+    assert res2.n_history_rows == 0
+    assert _requested(logs) == {
+        "track": [], "artist": ["spotify:artist:9"], "episode": [], "podcast": [],
+    }  # fmt: skip
+    after = part_files()
+    assert {n for n in before if after[n] != before[n]} == {"dim_artist"}
+    assert res2.dims["artist"].filter(
+        F.col("spotify_artist_uri") == "spotify:artist:9"
+    ).count() == 1
+
+    res3 = pipeline.run(spark, str(raw_dir), wh, fetchers=fetchers)
+    assert res3.n_fact_rows == {"tracks": 0, "podcasts": 0}
+    assert _requested(logs) == {"track": [], "artist": [], "episode": [], "podcast": []}
+    assert part_files() == after
 
 
 def test_pipeline_size_switch_distributed_enrichment(spark, raw_dir, tmp_path):
